@@ -2609,18 +2609,16 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
 
     Emits ONE row (n_pairs, w_plus2, w_minus2, z_stat).
     """
+    # round, not floor: 9.98 * 100 is 997.99..., and floor would make
+    # the cents of d and -d differ in magnitude (W+/W- stop swapping
+    # when every difference flips sign)
+    cents = F.round(F.col("value") * 100).cast("long")
     halves = events.groupBy("user_id").agg(
         F.sum(
-            F.when(
-                F.dayofmonth("ts") <= 15,
-                F.floor(F.col("value") * 100).cast("long"),
-            ).otherwise(F.lit(0))
+            F.when(F.dayofmonth("ts") <= 15, cents).otherwise(F.lit(0))
         ).alias("a"),
         F.sum(
-            F.when(
-                F.dayofmonth("ts") >= 16,
-                F.floor(F.col("value") * 100).cast("long"),
-            ).otherwise(F.lit(0))
+            F.when(F.dayofmonth("ts") >= 16, cents).otherwise(F.lit(0))
         ).alias("b"),
     )
     diffs = halves.select(

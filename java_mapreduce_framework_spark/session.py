@@ -64,6 +64,9 @@ def get_spark(app_name: str = "jmrf-spark", cpus: int | None = None) -> SparkSes
         # recommends outright.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) parquet columns read as raw int64 nanos, which
+        # sources.tables.load_table floors to microseconds
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # default generated-class cache is 100 entries; an engine
         # session serving the full registry compiles more distinct
@@ -82,12 +85,15 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to an externally provided session.
 
     The verification driver owns its SparkSession; these are the
-    confs whose defaults would silently change semantics (timezone)
-    or performance (AQE, Arrow). All are runtime-mutable.
+    confs whose defaults would silently change semantics (timezone,
+    nanos timestamps) or performance (AQE, Arrow). All are
+    runtime-mutable.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     # see get_spark: shuffled-hash join where it fits (guide §3.1)
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    # see get_spark: nanos timestamps read as long (sources.tables)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark

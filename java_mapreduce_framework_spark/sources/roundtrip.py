@@ -27,7 +27,7 @@ import pathlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .tables import load_table, source_fingerprint
+from .tables import load_table, read_parquet, source_fingerprint
 
 _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
 
@@ -145,7 +145,7 @@ def read_events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     a filter on the partition column prunes directories at the scan
     (PartitionFilters, not data skipping)."""
     path = _stage(spark, sf_dir, "events_partitioned")
-    return spark.read.parquet(str(path))
+    return read_parquet(spark, str(path))
 
 
 def compacted_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import parquet_schema
+
 
 def stage_once(stage: pathlib.Path, build: Callable[[str], None]) -> pathlib.Path:
     """Build-once DIRECTORY fixture (stream source dirs, kv text
@@ -91,10 +93,11 @@ def _register_external(
 ) -> None:
     """Adopt an existing staged directory as an external table --
     schema from the parquet footers (marker files start with '_' and
-    are invisible to the scan), bucket spec re-declared verbatim so
+    are invisible to the scan; inferred once per staged generation by
+    ``tables.parquet_schema``), bucket spec re-declared verbatim so
     the catalog metadata matches the layout the original bucketed
     write produced."""
-    ddl = spark.read.parquet(str(path)).schema.toDDL()
+    ddl = parquet_schema(spark, str(path)).toDDL()
     clause = ""
     if bucket_cols:
         bs = ", ".join(bucket_cols)

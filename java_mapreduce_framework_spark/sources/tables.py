@@ -11,12 +11,33 @@ engine's canonical fixture format:
    predicate-pushdown- and column-pruning-friendly; this is the 100 TB
    path (a directory of parquet files partitioned on disk behaves
    identically).
+
+Parquet schemas are resolved once per process. ``spark.read.parquet``
+without a schema launches a Spark job that reads a footer to infer it
+(52-90 ms at 4 cores, against 5-10 ms for a schema-given read), and
+the engine reads the same fixtures and staged copies over and over.
+``parquet_schema`` infers a path's schema once and caches it;
+``read_parquet`` reads with that schema. An entry is keyed on the
+absolute path, the ``(name, size, mtime_ns)`` of every file Spark
+would scan under it (symlinks followed, ``_``/``.`` names skipped as
+Spark skips them) and ``spark.sql.legacy.parquet.nanosAsLong``, which
+changes the inferred type of TIMESTAMP(NANOS) columns. A path keeps
+at most one entry, replaced when its key changes, so a regenerated or
+grown input is re-inferred and memory stays bounded by the number of
+distinct paths read. Outputs that a query rewrites on every call --
+the streaming queries' parquet sinks, ``sinks.compact_parquet_dir``'s
+output, the dynamic-overwrite round trip -- are read with plain
+``spark.read.parquet``: their key changes on every call, so the cache
+would add its file walk to the inference job and save nothing.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -32,13 +53,77 @@ TABLES = (
 )
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: absolute path -> (key, schema); see the module docstring
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _scanned_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """``(name, size, mtime_ns)`` of every file a parquet scan of
+    ``path`` reads: the file itself, or the non-hidden files below a
+    directory. ``os.stat`` follows symlinks (streaming stages link to
+    the fixtures)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet file or directory at ``path``, inferred by
+    Spark on the first call and served from the process-wide cache
+    until the files under ``path`` or ``nanosAsLong`` change.
+
+    The key is taken BEFORE inference: if the files change while
+    Spark reads them, the stored key is already stale and the next
+    call re-infers. Concurrent callers can at worst infer twice; the
+    dict's single get/set operations keep every entry consistent.
+    A path with no local files (missing, or on a remote filesystem)
+    has nothing to key on and is inferred on every call. Every caller
+    gets the same ``StructType`` object: treat it as read-only
+    (``StructType.add`` mutates in place)."""
+    abspath = os.path.abspath(path)
+    files = _scanned_files(abspath)
+    if not files:
+        return spark.read.parquet(path).schema
+    key = (files, spark.conf.get(_NANOS_AS_LONG, "false"))
+    hit = _SCHEMAS.get(abspath)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[abspath] = (key, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the cached schema: no
+    footer-inference job once ``path`` has been read in this process."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain ``spark.read.parquet`` so Catalyst
-    retains pushdown/pruning; no caching here (operators decide).
+    """Load one fixture table through ``read_parquet``: the schema is
+    inferred on the first load of a fixture in this process and reused
+    after that (keyed on the fixture file's size and mtime and on
+    ``nanosAsLong``, see the module docstring), so a repeat load fires
+    no Spark job. The read is a plain schema-given parquet scan, so
+    Catalyst retains pushdown/pruning; no caching of data here
+    (operators decide).
 
     ``events.ts`` has shipped under two physical parquet types across
     fixture generations: TIMESTAMP(NANOS) (which Spark cannot
-    represent -- read nanos as long, floor-divide to microseconds) and
+    represent -- read nanos as long under the session's
+    ``nanosAsLong=true``, set by ``session.get_spark`` and
+    ``session.tune_session``, then floor-divide to microseconds) and
     plain TIMESTAMP(MICROS) with isAdjustedToUTC=false (which Spark
     reads as TIMESTAMP_NTZ -- cast to the session-zone TIMESTAMP,
     identical instants under the engine's pinned UTC session). Both
@@ -48,17 +133,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = f"{sf_dir}/{name}.parquet"
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
         ts_type = df.schema["ts"].dataType.typeName()
         if ts_type == "long":  # TIMESTAMP(NANOS) read as raw nanos
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_type == "timestamp_ntz":
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return df
 
 
 def source_fingerprint(sf_dir: str, *names: str) -> str:

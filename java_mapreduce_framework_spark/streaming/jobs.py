@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col
-from ..sources.tables import load_table
+from ..sources.tables import load_table, parquet_schema, read_parquet
 
 _REPO_ROOT = pathlib.Path(__file__).resolve().parents[2]
 
@@ -135,7 +135,7 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming flagship: same explode/groupBy/count plan as
     ``operators.text.wordcount``, driven by the file-source stream."""
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     docs = spark.readStream.schema(schema).parquet(path)
     counts = (
         docs.select(F.explode(tokens_col("text")).alias("word"))
@@ -194,7 +194,7 @@ def stream_sessionize(
     so closed sessions emit and their state is dropped; complete mode
     here keeps the bounded-equality contract."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -230,7 +230,7 @@ def stream_dedup_watermarked(
     the declared oracle. Short-delay eviction behavior is exercised
     in tests/test_streaming.py with a two-file forced batch order."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     deduped = (
         events.select("user_id", "event_type", "ts")
@@ -276,7 +276,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     root = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_increment_sink"
     sink, ckpt = root / "sink", root / "ckpt"
     shutil.rmtree(root, ignore_errors=True)
@@ -326,7 +326,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result-identical (oracle re-verified); the plan drops the Python
     boundary entirely."""
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     docs = spark.readStream.schema(schema).parquet(path)
     out = (
         docs.select(F.md5("text").alias("content_hash"), "doc_id")
@@ -353,7 +353,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed/Delta table co-partitioned with the stream's shuffle.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     customer = F.broadcast(
         load_table(spark, sf_dir, "customer").select(
@@ -403,9 +403,15 @@ def stream_tumbling_window_watermarked(
     holds exactly the windows whose end <= final watermark
     (max event time - delay); trailing windows stay in state and are
     deliberately withheld. The oracle applies the same cutoff.
+
+    One sink + checkpoint directory per scale factor, cleared at the
+    start of each call: a call rewrites it from scratch, so repeated
+    calls leave one directory behind, not one per call.
     """
+    import shutil
+
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.withWatermark("ts", delay)
@@ -418,7 +424,9 @@ def stream_tumbling_window_watermarked(
             "total_value",
         )
     )
-    run = _REPO_ROOT / ".tmp" / "stream" / f"wm_{uuid.uuid4().hex[:12]}"
+    sf_name = pathlib.Path(sf_dir).name
+    run = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_wm"
+    shutil.rmtree(run, ignore_errors=True)
     with _stream_conf(spark):
         q = (
             agg.writeStream.outputMode("append")
@@ -445,7 +453,7 @@ def stream_sliding_window(
     window state; complete mode keeps bounded-input equality with the
     batch operator."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.window("ts", size, slide).alias("w"), "event_type")
@@ -489,7 +497,7 @@ def stream_stream_join(
     bounded fixture.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -558,7 +566,7 @@ def stream_stream_join_left(
     (state keyed on user_id, bounded by rate x (lookback + delay)).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -589,7 +597,7 @@ def stream_session_window_watermarked(
     declared oracle's HAVING cutoff. Trailing open sessions are
     deliberately withheld, as on a live stream."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path).withWatermark("ts", delay)
     agg = (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -638,7 +646,7 @@ def stream_foreachbatch_idempotent(
 
     sf_name = pathlib.Path(sf_dir).name
     src = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     root = _REPO_ROOT / ".tmp" / "stream" / f"{sf_name}_fbsink"
     sink, ckpt = root / "sink", root / "ckpt"
     shutil.rmtree(root, ignore_errors=True)
@@ -694,7 +702,7 @@ def stream_quality_filter(
     from ..operators.text import quality_score
 
     path = _stage_stream_dir(spark, sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     docs = spark.readStream.schema(schema).parquet(path)
     kept = quality_score(docs).filter(F.col("quality") >= min_quality)
     return _drain_to_memory(kept, mode="append")
@@ -717,7 +725,7 @@ def stream_topk_windowed(
     Emits (window_start, event_type, n_events, rnk).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.window("ts", duration).alias("w"), "event_type")
@@ -783,7 +791,7 @@ def stream_index_ingest(
     done = root / "_DONE_FP"
     verdict_path = str(root / "verdict")
     if done.exists() and done.read_text() == fp:
-        return spark.read.parquet(verdict_path)
+        return read_parquet(spark, verdict_path)
 
     shutil.rmtree(root, ignore_errors=True)
     root.mkdir(parents=True)
@@ -810,7 +818,7 @@ def stream_index_ingest(
     dedup.build_minhash_index(spark, corpus, name_s)
     dedup.build_minhash_index(spark, corpus, name_r)
 
-    schema = spark.read.parquet(str(src / "slice_0.parquet")).schema
+    schema = parquet_schema(spark, str(src / "slice_0.parquet"))
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
         survivors = dedup.dedup_incremental_apply(spark, batch_df, name_s)
@@ -842,7 +850,7 @@ def stream_index_ingest(
     # sequential batch replay, same slice order, same per-slice contract
     replay_parts = []
     for i in range(n_slices):
-        sl = spark.read.parquet(str(src / f"slice_{i}.parquet"))
+        sl = read_parquet(spark, str(src / f"slice_{i}.parquet"))
         sv = dedup.dedup_incremental_apply(spark, sl, name_r)
         dedup.dedup_index_append(spark, sv, name_r)
         replay_parts.append(sv.select("doc_id").localCheckpoint())
@@ -869,7 +877,7 @@ def stream_index_ingest(
     )
     verdict.write.mode("overwrite").parquet(verdict_path)
     done.write_text(fp)
-    return spark.read.parquet(verdict_path)
+    return read_parquet(spark, verdict_path)
 
 
 def stream_session_timeout(
@@ -930,7 +938,7 @@ def stream_session_timeout(
         m.group(2)
     ] * 1000
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = (
         spark.readStream.schema(schema).parquet(path).select("user_id", "ts")
     )
@@ -1029,7 +1037,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         (stage / "_STAGED").write_text(fp)
 
     src = str(stage / "data")
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     sink = stage / "target"
     ckpt = _ckpt_root() / f"cdc_upsert_{uuid.uuid4().hex[:12]}"
     shutil.rmtree(sink, ignore_errors=True)
@@ -1063,6 +1071,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
+    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(str(sink)).select(
         "event_id",
         "ts",
@@ -1099,7 +1108,7 @@ def stream_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``count(DISTINCT user_id)``.
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     pairs = (
         events.select(F.date_trunc("day", "ts").alias("day"), "user_id")
@@ -1124,7 +1133,7 @@ def stream_daily_active_users_setstate(
     result every trigger. The declared bounded-state form is
     ``stream_daily_active_users`` above."""
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = (
         events.groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -1151,7 +1160,7 @@ def stream_hll_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits (day, dau_approx).
     """
     path = _stage_stream_dir(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     events = spark.readStream.schema(schema).parquet(path)
     agg = events.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.approx_count_distinct("user_id", rsd=0.02)

@@ -1,6 +1,21 @@
+import os
+import pathlib
+import re
+import shutil
+import time
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from java_mapreduce_framework_spark.sources.tables import load_table, read_kv_text_dir
+from java_mapreduce_framework_spark.session import tune_session
+from java_mapreduce_framework_spark.sources.tables import (
+    load_table,
+    parquet_schema,
+    read_kv_text_dir,
+    read_parquet,
+)
 
 
 def test_read_kv_text_dir(spark, tmp_path):
@@ -115,6 +130,178 @@ def test_load_table_events_timestamp_us(spark, sf_small):
     assert dict(events.dtypes)["ts"] == "timestamp"
     # microsecond floor of the nanos fixture: values must be non-null
     assert events.filter(F.col("ts").isNull()).count() == 0
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Number of Spark jobs submitted while ``fn()`` runs. A sentinel
+    job in a second group runs after it; the status store applies job
+    starts in submission order, so once the sentinel is visible every
+    job ``fn`` fired has been counted."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(group + "-end", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 60
+    while not tracker.getJobIdsForGroup(group + "-end"):
+        assert time.time() < deadline, "sentinel job never reached the status store"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_load_table_repeat_fires_no_jobs(spark, sf_small, tmp_path):
+    """The first load of a table infers its schema with a Spark job;
+    the second is served from the schema cache and fires none."""
+    shutil.copy(f"{sf_small}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    d = str(tmp_path)
+    assert _jobs_fired(spark, lambda: load_table(spark, d, "lineitem")) >= 1
+    assert _jobs_fired(spark, lambda: load_table(spark, d, "lineitem")) == 0
+    assert load_table(spark, d, "lineitem").count() == (
+        load_table(spark, sf_small, "lineitem").count()
+    )
+
+
+def test_schema_cache_follows_rewrite_at_same_path(spark, tmp_path):
+    """A copy rewritten in place with an extra column is re-inferred:
+    the cache key holds the file's size and mtime, so a regenerated
+    fixture is never shadowed by its old schema."""
+    path = tmp_path / "region.parquet"
+    base = {"r_regionkey": [0, 1], "r_name": ["A", "B"]}
+    pq.write_table(pa.table(base), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({**base, "r_extra": [1.5, 2.5]}), path)
+    assert parquet_schema(spark, str(path)).names == ["r_regionkey", "r_name", "r_extra"]
+    df = load_table(spark, str(tmp_path), "region")
+    assert sorted(r["r_extra"] for r in df.collect()) == [1.5, 2.5]
+
+
+def test_schema_cache_invalidated_by_added_part_file(spark, tmp_path):
+    """Directory inputs (the split layout: several part files per
+    table) key on every part file, so one more file is a cache miss."""
+    d = tmp_path / "orders.parquet"
+    d.mkdir()
+    for i in range(2):
+        pq.write_table(pa.table({"o_orderkey": [i]}), d / f"part-{i}.parquet")
+    (d / "_SUCCESS").write_text("")
+    path = str(d)
+    assert _jobs_fired(spark, lambda: parquet_schema(spark, path)) >= 1
+    assert _jobs_fired(spark, lambda: parquet_schema(spark, path)) == 0
+    (d / "_SUCCESS").write_text("marker files are not scanned")
+    assert _jobs_fired(spark, lambda: parquet_schema(spark, path)) == 0
+    pq.write_table(pa.table({"o_orderkey": [2]}), d / "part-2.parquet")
+    assert _jobs_fired(spark, lambda: parquet_schema(spark, path)) >= 1
+    assert _jobs_fired(spark, lambda: parquet_schema(spark, path)) == 0
+    got = sorted(r["o_orderkey"] for r in read_parquet(spark, path).collect())
+    assert got == [0, 1, 2]
+
+
+def test_schema_cache_concurrent_callers_and_rewrite(spark, tmp_path):
+    """Threads share the cache (foreachBatch bodies run off the main
+    thread). Under concurrent lookups and an in-place rewrite, every
+    call returns one of the two real schemas, and once the rewrite is
+    done the cache serves the new one: the key is taken before
+    inference, so no interleaving stores the old schema under the new
+    key."""
+    import sys
+    import threading
+
+    path = tmp_path / "part.parquet"
+    pq.write_table(pa.table({"p_partkey": list(range(50))}), path)
+    old, new = ["p_partkey"], ["p_partkey", "p_extra"]
+    seen, errors = [], []
+
+    def worker():
+        try:
+            for _ in range(6):
+                seen.append(parquet_schema(spark, str(path)).names)
+        except Exception as e:  # noqa: BLE001 -- reported below
+            errors.append(e)
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        # regenerate atomically: a reader sees the old file or the new
+        tmp = tmp_path / "part.parquet.tmp"
+        pq.write_table(pa.table({"p_partkey": list(range(50)), "p_extra": [0.5] * 50}), tmp)
+        os.replace(tmp, path)
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(seen) == 48 and all(names in (old, new) for names in seen)
+    assert parquet_schema(spark, str(path)).names == new
+
+
+def test_load_table_events_nanos_cached_schema(spark, tmp_path):
+    """TIMESTAMP(NANOS) events: the cached schema types ``ts`` as long
+    (the session's nanosAsLong), and a read GIVEN that long schema
+    still decodes nanos -- both loads floor to the same microsecond
+    instants."""
+    ns = [1_700_000_000_123_456_789, 1_700_000_360_000_000_999]
+    tbl = pa.table(
+        {"event_id": pa.array([1, 2], pa.int64()), "ts": pa.array(ns, pa.timestamp("ns"))}
+    )
+    pq.write_table(tbl, tmp_path / "events.parquet", version="2.6")
+    ts_field = pq.read_schema(tmp_path / "events.parquet").field("ts")
+    assert ts_field.type == pa.timestamp("ns")
+    # a plain session reads nanos as long once tune_session (applied by
+    # every registered query) has run; load_table no longer sets it
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    tune_session(spark)
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+    def micros():
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        rows = df.select("event_id", F.unix_micros("ts").alias("us")).collect()
+        return sorted((r["event_id"], r["us"]) for r in rows)
+
+    first = micros()
+    schema = parquet_schema(spark, str(tmp_path / "events.parquet"))
+    assert schema["ts"].dataType.typeName() == "long"
+    assert _jobs_fired(spark, lambda: load_table(spark, str(tmp_path), "events")) == 0
+    assert micros() == first == [(1, ns[0] // 1000), (2, ns[1] // 1000)]
+
+
+#: ``<reader>.read.parquet(<args>).schema`` -- schema inference outside
+#: the cache; arguments may nest one level of parentheses
+_INFERENCE = re.compile(r"\bread\s*\.\s*parquet\((?:[^()]|\([^()]*\))*\)\s*\.\s*schema\b")
+
+
+def test_no_schema_inference_outside_tables_module():
+    """Every parquet schema lookup goes through
+    ``sources.tables.parquet_schema``: a ``read.parquet(...).schema``
+    anywhere else in the package (``experimental/`` excepted) brings
+    back one footer-inference job per call."""
+    for sample in (
+        "schema = spark.read.parquet(path).schema",
+        'spark.read.parquet(str(src / "slice_0.parquet")).schema',
+        "ddl = spark.read.parquet(\n    str(path)\n).schema.toDDL()",
+    ):
+        assert _INFERENCE.search(sample), sample
+    assert not _INFERENCE.search("spark.read.schema(s).parquet(path)")
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "java_mapreduce_framework_spark"
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg)
+        if rel.parts[0] == "experimental" or rel == pathlib.Path("sources/tables.py"):
+            continue
+        src = py.read_text()
+        for m in _INFERENCE.finditer(src):
+            offenders.append(f"{rel}:{src.count(chr(10), 0, m.start()) + 1}")
+    assert not offenders, offenders
 
 
 def test_load_table_pushdown_projection(spark, sf_small):

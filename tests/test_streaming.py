@@ -548,3 +548,33 @@ def test_stream_session_timeout_crafted_timer_semantics(spark, tmp_path):
         (2, 1, "gap"),       # closed in-stream by event 5
         # user 2's trailing session: withheld (watermark never passes)
     ]
+
+
+def test_stream_scratch_does_not_grow_per_call(spark, sf_small):
+    """Repeated calls reuse their scratch: stream_cdc_upsert removes
+    its checkpoint after the drain, and the watermarked tumbling query
+    keeps one sink directory per scale factor."""
+    import pathlib
+
+    from java_mapreduce_framework_spark.streaming.jobs import (
+        _REPO_ROOT,
+        _ckpt_root,
+        stream_cdc_upsert,
+        stream_tumbling_window_watermarked,
+    )
+
+    def entries(parent: pathlib.Path, marker: str) -> set[str]:
+        if not parent.is_dir():
+            return set()
+        return {p.name for p in parent.iterdir() if marker in p.name}
+
+    ckpt_parent = _ckpt_root()
+    stream_parent = _REPO_ROOT / ".tmp" / "stream"
+    ckpts_before = entries(ckpt_parent, "cdc_upsert_")
+    wm_before = entries(stream_parent, "wm")
+    for _ in range(2):
+        assert stream_cdc_upsert(spark, sf_small).count() > 0
+        assert stream_tumbling_window_watermarked(spark, sf_small).count() > 0
+    assert entries(ckpt_parent, "cdc_upsert_") == ckpts_before
+    new_wm = entries(stream_parent, "wm") - wm_before
+    assert new_wm <= {f"{pathlib.Path(sf_small).name}_wm"}
